@@ -65,8 +65,8 @@ final class GraphQLExecutor(
       variables: Map[String, Any] = Map.empty): String =
     renderResponse(plans(doc, operationName, variables))
 
-  /** Execute pre-compiled root plans (see [[plans]]) — lets an edge cache
-    * the compiled plans per request shape and re-render per request.
+  /** Execute pre-compiled root plans (see [[plans]]) — lets a caller time
+    * compilation and execution apart.
     */
   def renderResponse(compiled: List[RootPlan]): String = {
     val parts = compiled.map { p =>

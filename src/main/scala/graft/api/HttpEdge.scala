@@ -4,6 +4,8 @@ import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
+import graft.operators.VersionedRoot
+import graft.plans.BalanceMvRewrite
 import graft.warehouse.Warehouse
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -35,54 +37,42 @@ import org.apache.spark.sql.functions._
   *       GraphQLExecutor; selection sets drive the plans)
   *
   * Requests are served by a small fixed pool over one shared
-  * SparkSession, and built plans are memoized per (route, args) — see the
-  * plan-cache note below.
+  * SparkSession, and rendered 200 bodies are memoized per (route, args)
+  * until refresh() — see the response-memo note below.
   */
 final class HttpEdge(spark: SparkSession, warehouseDir: String, port: Int) {
 
   private def table(name: String): DataFrame =
     spark.read.parquet(s"$warehouseDir/$name")
 
-  // ---- plan cache ------------------------------------------------------
+  // ---- response memo -----------------------------------------------------
   //
-  // Analysis + optimization of these small plans costs single-digit ms per
-  // request — the analog of the reference preparing a statement per query
-  // (GraphQLPersistence.scala:149-368). The LRU below memoizes the BUILT
-  // DataFrame per normalized (route, args) key, so repeated request shapes
-  // (point lookups, hot dashboards) skip plan construction entirely;
-  // execution still runs per request. Caching a DataFrame pins its file
-  // LISTING: the edge serves the warehouse snapshot it first read —
-  // call refresh() (or construct a new edge) after a sync pass.
-  private val planCache =
-    new java.util.LinkedHashMap[String, DataFrame](64, 0.75f, true) {
-      override def removeEldestEntry(e: java.util.Map.Entry[String, DataFrame]): Boolean =
-        size > 256
-    }
+  // The edge promises snapshot semantics between refresh() calls: a
+  // normalized (route, args) key answers from the warehouse state it first
+  // read. Parquet files and the pinned MV version are immutable, so
+  // re-running a key's plan would return the body its first run rendered;
+  // the memo stores that body instead of the plan, and a repeated request
+  // plans and executes nothing. Only 200 bodies are stored: errors escape
+  // `render` as exceptions. A request captures the snapshot it starts
+  // under and writes only into it, so a request in flight across
+  // refresh() cannot leave a pre-refresh body in the new memo.
+  @volatile private var snapshot = new HttpEdge.Snapshot(None)
 
-  private def cached(key: String)(build: => DataFrame): DataFrame = {
-    val hit = planCache.synchronized(planCache.get(key))
-    if (hit != null) hit
-    else {
-      val df = build // build outside the lock: analysis may take ms
-      planCache.synchronized(planCache.put(key, df))
-      df
-    }
-  }
-
-  /** Cached-plan count (bounded at 256) — exposed for tests/monitoring. */
-  def cachedPlans: Int = planCache.synchronized(planCache.size)
-
-  /** Drop all cached plans (and their pinned file listings) so subsequent
-    * requests see the current warehouse state. The balance MV's CURRENT
-    * pointer is re-resolved here and ONLY here (and at start()): between
-    * refreshes the edge serves one pinned, immutable MV version, so a
-    * sync publishing mid-request can never yank files from a running
-    * scan — the swap-while-serving contract, deployed.
+  /** Memoized response count of the current snapshot (bounded at
+    * [[HttpEdge.MemoEntries]] entries and [[HttpEdge.MemoBytes]] bytes) —
+    * exposed for tests/monitoring.
     */
-  def refresh(): Unit = {
-    planCache.synchronized(planCache.clear())
-    gqlCache.synchronized(gqlCache.clear())
-    installMvRule() // re-resolve CURRENT + re-bind to the fresh lake listing
+  def cachedPlans: Int = snapshot.size
+
+  /** Drop the memo so subsequent requests see the current warehouse state.
+    * The balance MV's CURRENT pointer is re-resolved here and ONLY here
+    * (and at start()): between refreshes the edge serves one pinned,
+    * immutable MV version, so a sync publishing mid-request can never
+    * yank files from a running scan — the swap-while-serving contract,
+    * deployed. Both happen as one swap of the snapshot object.
+    */
+  def refresh(): Unit = synchronized {
+    swapMvRule(resolveMvRule())
   }
 
   // ---- balance-MV rewrite on the serving path --------------------------
@@ -98,16 +88,13 @@ final class HttpEdge(spark: SparkSession, warehouseDir: String, port: Int) {
   // GraftExtensions injects the same conf-bound rule at session build).
   // Scoped point lookups and pages keep their balanceOf/balancesFor plans:
   // the rule's soundness checks decline subset aggregates by design.
-  private var mvRule: Option[graft.plans.BalanceMvRewrite] = None
 
-  private def installMvRule(): Unit = synchronized {
-    mvRule.foreach { r =>
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations.filterNot(_ eq r)
-    }
-    mvRule = None
+  /** The rule bound to the MV version CURRENT points at now, when the
+    * sync pass maintains the MV.
+    */
+  private def resolveMvRule(): Option[BalanceMvRewrite] = {
     // the sync pass publishes the MV through VersionedRoot: resolve the
-    // CURRENT pointer ONCE per install — the resolved v<N> directory is
+    // CURRENT pointer ONCE per snapshot — the resolved v<N> directory is
     // immutable, so every plan built until the next refresh() reads one
     // consistent MV version regardless of concurrent publishes. The
     // root helper dispatches the storage backend by scheme (r19): local
@@ -117,24 +104,21 @@ final class HttpEdge(spark: SparkSession, warehouseDir: String, port: Int) {
     // contract: refresh() at least every mvKeepVersions-1 sync passes,
     // or the pinned version can be vacuumed mid-serve (Warehouse.sync's
     // retire knob).
-    val (mvStore, mvRoot) =
-      graft.warehouse.Warehouse.balancesRoot(warehouseDir)
-    if (graft.operators.VersionedRoot.publishedAt(mvStore, mvRoot)) {
-      val pinned = graft.operators.VersionedRoot.resolveAt(mvStore, mvRoot)
-      val rule = graft.plans.BalanceMvRewrite.forSource(spark, pinned,
-        Warehouse.balances(Warehouse.balanceChanges(table("transfer"))))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ rule
-      mvRule = Some(rule)
-    }
+    val (mvStore, mvRoot) = Warehouse.balancesRoot(warehouseDir)
+    if (!VersionedRoot.publishedAt(mvStore, mvRoot)) None
+    else Some(BalanceMvRewrite.forSource(spark, VersionedRoot.resolveAt(mvStore, mvRoot),
+      Warehouse.balances(Warehouse.balanceChanges(table("transfer")))))
   }
 
-  private def uninstallMvRule(): Unit = synchronized {
-    mvRule.foreach { r =>
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations.filterNot(_ eq r)
-    }
-    mvRule = None
+  /** Installs `rule` in place of the current snapshot's, then publishes a
+    * fresh snapshot bound to it. Publishing last means every request that
+    * captures the new snapshot plans under the new rule.
+    */
+  private def swapMvRule(rule: Option[BalanceMvRewrite]): Unit = synchronized {
+    val old = snapshot.mvRule
+    spark.experimental.extraOptimizations =
+      spark.experimental.extraOptimizations.filterNot(r => old.exists(_ eq r)) ++ rule
+    snapshot = new HttpEdge.Snapshot(rule)
   }
 
   /** The full per-tenant balance report — the declarative lake aggregate
@@ -158,7 +142,7 @@ final class HttpEdge(spark: SparkSession, warehouseDir: String, port: Int) {
   }
 
 
-  private val server = HttpServer.create(new InetSocketAddress(port), 0)
+  private val server = HttpEdge.bind(port)
 
   /** Small fixed pool — the analog of the reference's bounded DB
     * connection pool. Each request runs read-only plans against a shared
@@ -180,26 +164,49 @@ final class HttpEdge(spark: SparkSession, warehouseDir: String, port: Int) {
     }.toMap
   }
 
-  private def respond(ex: HttpExchange, code: Int, body: String): Unit = {
-    val bytes = body.getBytes(StandardCharsets.UTF_8)
-    ex.getResponseHeaders.set("Content-Type", "application/json")
-    ex.sendResponseHeaders(code, bytes.length)
-    ex.getResponseBody.write(bytes)
+  private def respond(ex: HttpExchange, code: Int, body: Array[Byte],
+      contentType: String = "application/json"): Unit = {
+    ex.getResponseHeaders.set("Content-Type", contentType)
+    ex.sendResponseHeaders(code, body.length)
+    ex.getResponseBody.write(body)
     ex.close()
   }
+
+  private def utf8(s: String): Array[Byte] = s.getBytes(StandardCharsets.UTF_8)
 
   private def json(df: DataFrame): String =
     df.toJSON.collect().mkString("[", ",", "]")
 
-  private def handle(path: String)(f: Map[String, String] => String): Unit =
-    server.createContext(path, (ex: HttpExchange) =>
-      try respond(ex, 200, f(params(ex)))
+  /** Serves `path`: `f` gets the exchange and the snapshot captured as the
+    * request starts, and returns the 200 body. Error mapping follows
+    * RootRouter.scala:22-41 — GraphQL syntax and query-analysis errors are
+    * 400s carrying the source position, bad arguments 400s, the rest 500s.
+    */
+  private def handle(path: String)(f: (HttpExchange, HttpEdge.Snapshot) => Array[Byte]): Unit =
+    server.createContext(path, (ex: HttpExchange) => {
+      val snap = snapshot
+      try respond(ex, 200, f(ex, snap))
       catch {
+        case GraphQL.SyntaxError(msg, line, col) =>
+          respond(ex, 400, utf8(
+            s"""{"syntaxError":${quote(s"Syntax error while parsing GraphQL query. Invalid input, $msg")},""" +
+              s""""locations":[{"line":$line,"column":$col}]}"""))
+        case GraphQL.AnalysisError(msg, line, col) =>
+          respond(ex, 400, utf8(
+            s"""{"errors":[{"message":${quote(msg)},"locations":[{"line":$line,"column":$col}]}]}"""))
         case e: IllegalArgumentException =>
-          respond(ex, 400, s"""{"error":${quote(e.getMessage)}}""")
+          respond(ex, 400, utf8(s"""{"error":${quote(e.getMessage)}}"""))
         case e: Throwable =>
-          respond(ex, 500, s"""{"error":${quote(e.toString)}}""")
-      })
+          respond(ex, 500, utf8(s"""{"error":${quote(e.toString)}}"""))
+      }
+    })
+
+  /** A REST route whose 200 bodies are memoized per [[cacheKey]]. */
+  private def route(path: String)(df: Map[String, String] => DataFrame): Unit =
+    handle(path) { (ex, snap) =>
+      val p = params(ex)
+      snap.memo(cacheKey(path, p))(json(df(p)))
+    }
 
   private def quote(s: String): String =
     "\"" + Option(s).getOrElse("").flatMap {
@@ -230,67 +237,38 @@ final class HttpEdge(spark: SparkSession, warehouseDir: String, port: Int) {
 
   /** GraphQL endpoint (GraphQLRouter.scala:14-64): POST /graphql with a
     * JSON body {query, operationName, variables} (array-wrapped bodies
-    * accepted, :38-44) and GET /graphql?query=&operation=. Error mapping
-    * follows RootRouter.scala:22-41 — syntax errors and query-analysis
-    * errors are 400s carrying the source position.
+    * accepted, :38-44) and GET /graphql?query=&operation=. Responses are
+    * memoized per (document, operation, variables), like the REST routes.
     */
   private lazy val graphql = new GraphQLExecutor(
     () => table("tenant"), () => table("account"), () => table("transfer"))
 
-  /** Compiled GraphQL root plans per (document, operation, variables) —
-    * same LRU/snapshot semantics as the REST plan cache.
-    */
-  private val gqlCache =
-    new java.util.LinkedHashMap[String, List[graphql.RootPlan]](64, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[String, List[graphql.RootPlan]]): Boolean = size > 256
+  private def serveGraphql(ex: HttpExchange, snap: HttpEdge.Snapshot): Array[Byte] = {
+    val (query, opName, vars) = ex.getRequestMethod match {
+      case "POST" =>
+        val body = new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
+        parseGraphqlBody(body)
+      case "GET" =>
+        val p = params(ex)
+        (p.getOrElse("query", throw new IllegalArgumentException("missing arg: query")),
+          p.get("operation"), Map.empty[String, Any])
+      case m =>
+        throw new IllegalArgumentException(s"unsupported method $m")
     }
+    snap.memo(gqlKey(query, opName, vars))(graphql.execute(query, opName, vars))
+  }
 
-  private def handleGraphql(ex: HttpExchange): Unit =
-    try {
-      val (query, opName, vars) = ex.getRequestMethod match {
-        case "POST" =>
-          val body = new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
-          parseGraphqlBody(body)
-        case "GET" =>
-          val p = params(ex)
-          (p.getOrElse("query", throw new IllegalArgumentException("missing arg: query")),
-            p.get("operation"), Map.empty[String, Any])
-        case m =>
-          throw new IllegalArgumentException(s"unsupported method $m")
-      }
-      // injective key: encoded components so variable values containing
-      // the delimiters cannot collide across distinct requests
-      val key = {
-        def enc(s: String) = java.net.URLEncoder.encode(s, "UTF-8")
-        "graphql:" + enc(query) + " " + enc(opName.getOrElse("")) + " " +
-          vars.toSeq.sortBy(_._1)
-            .map { case (k, v) => s"${enc(k)}=${enc(String.valueOf(v))}" }
-            .mkString(",")
-      }
-      val compiled = {
-        val hit = gqlCache.synchronized(gqlCache.get(key))
-        if (hit != null) hit
-        else {
-          val p = graphql.plans(query, opName, vars)
-          gqlCache.synchronized(gqlCache.put(key, p))
-          p
-        }
-      }
-      respond(ex, 200, graphql.renderResponse(compiled))
-    } catch {
-      case GraphQL.SyntaxError(msg, line, col) =>
-        respond(ex, 400,
-          s"""{"syntaxError":${quote(s"Syntax error while parsing GraphQL query. Invalid input, $msg")},""" +
-            s""""locations":[{"line":$line,"column":$col}]}""")
-      case GraphQL.AnalysisError(msg, line, col) =>
-        respond(ex, 400,
-          s"""{"errors":[{"message":${quote(msg)},"locations":[{"line":$line,"column":$col}]}]}""")
-      case e: IllegalArgumentException =>
-        respond(ex, 400, s"""{"error":${quote(e.getMessage)}}""")
-      case e: Throwable =>
-        respond(ex, 500, s"""{"error":${quote(e.toString)}}""")
-    }
+  /** Injective key: encoded components so values containing the delimiters
+    * cannot collide, and each variable tagged with its type so `5` and
+    * `"5"` (or `null` and `"null"`) stay distinct requests.
+    */
+  private def gqlKey(query: String, opName: Option[String], vars: Map[String, Any]): String = {
+    def enc(s: String) = java.net.URLEncoder.encode(s, "UTF-8")
+    def tagged(v: Any) =
+      if (v == null) "null" else s"${v.getClass.getName}:${enc(v.toString)}"
+    "graphql:" + enc(query) + " " + enc(opName.getOrElse("")) + " " +
+      vars.toSeq.sortBy(_._1).map { case (k, v) => s"${enc(k)}=${tagged(v)}" }.mkString(",")
+  }
 
   /** {query, operationName, variables} out of the POST body; a JSON array
     * body contributes its first element (GraphQLRouter.scala:38-44).
@@ -352,90 +330,79 @@ final class HttpEdge(spark: SparkSession, warehouseDir: String, port: Int) {
   }
 
   def start(): HttpEdge = {
-    handle("/health") { _ =>
+    // the probe is never memoized: it must touch the warehouse every time
+    handle("/health") { (_, _) =>
       val ok =
         try Api.tenants(table("tenant"), limit = 1, offset = 0).count() >= 0
         catch { case _: Throwable => false }
-      s"""{"healthy":$ok,"graphql":$ok}"""
+      utf8(s"""{"healthy":$ok,"graphql":$ok}""")
     }
-    handle("/tenants") { p =>
+    route("/tenants") { p =>
       // `after=<name>` switches to keyset pagination (O(page) deep scans)
-      json(cached(cacheKey("/tenants", p))(p.get("after") match {
+      p.get("after") match {
         case a @ Some(_) =>
           noOffsetWithAfter(p)
           Api.tenantsAfter(table("tenant"), a,
             p.getOrElse("limit", "100").toLong)
         case None => Api.tenants(table("tenant"),
           p.getOrElse("limit", "100").toLong, p.getOrElse("offset", "0").toLong)
-      }))
+      }
     }
-    handle("/tenant") { p =>
-      json(cached(cacheKey("/tenant", p))(Api.tenant(table("tenant"), required(p, "name"))))
-    }
-    handle("/accounts") { p =>
+    route("/tenant") { p => Api.tenant(table("tenant"), required(p, "name")) }
+    route("/accounts") { p =>
       // page on the raw account table, join balances ONCE on the page
       // (feeding the balance join into the filter input would compute the
       // full aggregation twice per request)
-      json(cached(cacheKey("/accounts", p))({
-        // `after=<name>` switches to keyset pagination, like /transfers
-        val page = p.get("after") match {
-          case a @ Some(_) =>
-            noOffsetWithAfter(p)
-            Api.accountsAfter(table("account"), required(p, "tenant"),
-              currency = p.get("currency"), format = p.get("format"),
-              after = a, limit = p.getOrElse("limit", "100").toLong)
-          case None => Api.accounts(table("account"), required(p, "tenant"),
+      // `after=<name>` switches to keyset pagination, like /transfers
+      val page = p.get("after") match {
+        case a @ Some(_) =>
+          noOffsetWithAfter(p)
+          Api.accountsAfter(table("account"), required(p, "tenant"),
             currency = p.get("currency"), format = p.get("format"),
-            limit = p.getOrElse("limit", "100").toLong,
-            offset = p.getOrElse("offset", "0").toLong)
-        }
-        // balancesFor scopes the aggregate to the page's accounts
-        page.join(Warehouse.balancesFor(table("transfer"), page),
-          Seq("tenant", "name"), "left")
-          .withColumn("balance",
-            coalesce(col("balance"), lit(0).cast("decimal(38,18)")).cast("double"))
-          .orderBy("name")
-      }))
+            after = a, limit = p.getOrElse("limit", "100").toLong)
+        case None => Api.accounts(table("account"), required(p, "tenant"),
+          currency = p.get("currency"), format = p.get("format"),
+          limit = p.getOrElse("limit", "100").toLong,
+          offset = p.getOrElse("offset", "0").toLong)
+      }
+      // balancesFor scopes the aggregate to the page's accounts
+      page.join(Warehouse.balancesFor(table("transfer"), page),
+        Seq("tenant", "name"), "left")
+        .withColumn("balance",
+          coalesce(col("balance"), lit(0).cast("decimal(38,18)")).cast("double"))
+        .orderBy("name")
     }
-    handle("/account") { p =>
+    route("/account") { p =>
       val t = required(p, "tenant"); val n = required(p, "name")
       // point lookup: Warehouse.balanceOf pushes the credit/debit
       // disjunction into the transfer scan (the page route's shared
       // balance aggregate would scan every transfer for one account)
-      json(cached(cacheKey("/account", p))(
-        Api.account(
-          table("account")
-            .join(Warehouse.balanceOf(table("transfer"), t, n),
-              Seq("tenant", "name"), "left")
-            .withColumn("balance",
-              coalesce(col("balance"), lit(0).cast("decimal(38,18)")).cast("double"))
-            .select("tenant", "name", "currency", "format", "balance"),
-          t, n)))
+      Api.account(
+        table("account")
+          .join(Warehouse.balanceOf(table("transfer"), t, n),
+            Seq("tenant", "name"), "left")
+          .withColumn("balance",
+            coalesce(col("balance"), lit(0).cast("decimal(38,18)")).cast("double"))
+          .select("tenant", "name", "currency", "format", "balance"),
+        t, n)
     }
-    handle("/transfers") { p => json(cached(cacheKey("/transfers", p))(transfersDf(p))) }
+    route("/transfers")(transfersDf)
     // the full per-tenant balance report (extension §2x): the declarative
-    // lake aggregate, answered from the maintained MV when the rule is
-    // installed (see installMvRule) — the one route that would otherwise
-    // aggregate the whole transfer lake per request
-    handle("/balances") { p =>
-      json(cached(cacheKey("/balances", p))(balancesDf(required(p, "tenant"))))
-    }
-    server.createContext("/graphql", (ex: HttpExchange) => handleGraphql(ex))
+    // lake aggregate, answered from the maintained MV when the snapshot's
+    // rule is installed (see resolveMvRule) — the one route that would
+    // otherwise aggregate the whole transfer lake per request
+    route("/balances") { p => balancesDf(required(p, "tenant")) }
+    handle("/graphql")(serveGraphql)
     // the reference serves a GraphiQL UI next to the endpoint
     // (GraphQLRouter.scala:66-73); self-contained equivalent, no CDN assets
-    server.createContext("/graphiql", (ex: HttpExchange) => {
-      val bytes = HttpEdge.GraphiqlHtml.getBytes(StandardCharsets.UTF_8)
-      ex.getResponseHeaders.set("Content-Type", "text/html; charset=utf-8")
-      ex.sendResponseHeaders(200, bytes.length)
-      ex.getResponseBody.write(bytes)
-      ex.close()
-    })
+    server.createContext("/graphiql", (ex: HttpExchange) =>
+      respond(ex, 200, utf8(HttpEdge.GraphiqlHtml), "text/html; charset=utf-8"))
     // a small pool instead of serial dispatch: plans are read-only and
     // SparkSession actions are thread-safe; concurrent requests become
     // concurrent Spark jobs (FIFO-scheduled). Pool ≈ the reference's DB
     // connection pool, not one-thread-per-request.
     server.setExecutor(pool)
-    installMvRule()
+    refresh()
     server.start()
     this
   }
@@ -481,13 +448,60 @@ final class HttpEdge(spark: SparkSession, warehouseDir: String, port: Int) {
   }
 
   def stop(): Unit = {
-    uninstallMvRule()
+    swapMvRule(None)
     server.stop(0)
     pool.shutdown()
   }
 }
 
 object HttpEdge {
+  // The JDK server writes the response headers and the body as two small
+  // segments. With Nagle on the accepted socket, the body waits for the
+  // client's delayed ACK of the headers — about 40 ms on every response,
+  // which would dominate a memo hit. The property is read once, when the
+  // first HttpServer is created, so it must be set before bind().
+  System.setProperty("sun.net.httpserver.nodelay", "true")
+
+  private def bind(port: Int): HttpServer = HttpServer.create(new InetSocketAddress(port), 0)
+
+  /** Memo bounds per snapshot: entries, and total body bytes. */
+  private[graft] val MemoEntries = 256
+  private[graft] val MemoBytes = 16L << 20
+
+  /** One serving snapshot: the balance-MV rule pinned at its creation, and
+    * the LRU of 200 bodies rendered under it. refresh() replaces the whole
+    * object; a request holds the one it started under.
+    */
+  private[graft] final class Snapshot(val mvRule: Option[BalanceMvRewrite]) {
+    private val bodies = new java.util.LinkedHashMap[String, Array[Byte]](64, 0.75f, true)
+    private var bytes = 0L
+
+    def size: Int = synchronized(bodies.size)
+
+    /** The stored body of `key`, else `render`'s, stored when it fits under
+      * [[MemoBytes]] and served either way. An exception from `render`
+      * stores nothing.
+      */
+    def memo(key: String)(render: => String): Array[Byte] = {
+      val hit = synchronized(bodies.get(key))
+      if (hit != null) hit
+      else {
+        val body = render.getBytes(StandardCharsets.UTF_8) // outside the lock
+        if (body.length <= MemoBytes) synchronized {
+          Option(bodies.put(key, body)).foreach(old => bytes -= old.length)
+          bytes += body.length
+          // access order: eldest first; `body` is newest and fits alone
+          val it = bodies.values.iterator
+          while (bytes > MemoBytes || bodies.size > MemoEntries) {
+            bytes -= it.next().length
+            it.remove()
+          }
+        }
+        body
+      }
+    }
+  }
+
   /** Minimal self-contained query console (the reference ships GraphiQL,
     * GraphQLRouter.scala:66-73; this needs no bundled JS assets).
     */

@@ -12,9 +12,21 @@ import graft.warehouse.Warehouse
   */
 class HttpEdgeSpec extends SparkSpec {
 
-  private def get(port: Int, pathAndQuery: String): (Int, String) = {
+  private def get(port: Int, pathAndQuery: String): (Int, String) =
+    send(port, pathAndQuery, None)
+
+  private def post(port: Int, path: String, body: String): (Int, String) =
+    send(port, path, Some(body))
+
+  private def send(port: Int, pathAndQuery: String, json: Option[String]): (Int, String) = {
     val url = java.net.URI.create(s"http://localhost:$port$pathAndQuery").toURL
     val conn = url.openConnection().asInstanceOf[java.net.HttpURLConnection]
+    json.foreach { body =>
+      conn.setRequestMethod("POST")
+      conn.setDoOutput(true)
+      conn.setRequestProperty("Content-Type", "application/json")
+      conn.getOutputStream.write(body.getBytes("UTF-8"))
+    }
     val code = conn.getResponseCode
     val is = if (code < 400) conn.getInputStream else conn.getErrorStream
     val body = new String(is.readAllBytes(), "UTF-8")
@@ -281,5 +293,139 @@ class HttpEdgeSpec extends SparkSpec {
         assert(get(port, "/tenants")._2.contains("TENANT")) // rebuilds fine
       } finally exec.shutdown()
     } finally edge.stop()
+  }
+
+  test("memo hits are byte-identical to executed responses and read nothing") {
+    val wh = Files.createTempDirectory("wh")
+    Warehouse.sync(spark, fixture(), wh.toString)
+    val edge = new HttpEdge(spark, wh.toString, port = 0).start()
+    try {
+      val port = edge.boundPort
+      val gql = java.net.URLEncoder.encode(
+        """{ tenants(limit: 10, offset: 0) { name } balances(tenant: "TENANT") { name balance } }""",
+        "UTF-8")
+      val gqlPost =
+        """{"query":"query($t: String!) { transfers(tenant: $t, limit: 10, offset: 0) """ +
+          """{ transaction amount credit { name balance } } }","variables":{"t":"TENANT"}}"""
+      val requests: Seq[Int => (Int, String)] = Seq(
+        "/tenants", "/tenant?name=TENANT", "/accounts?tenant=TENANT",
+        "/account?tenant=TENANT&name=CREDIT", "/transfers?tenant=TENANT&resolve=true",
+        "/balances?tenant=TENANT", s"/graphql?query=$gql"
+      ).map(path => (p: Int) => get(p, path)) :+ ((p: Int) => post(p, "/graphql", gqlPost))
+      val executed = requests.map(_(port))
+      executed.foreach { case (c, b) => assert(c == 200 && b.length > 2, s"$c $b") }
+      assert(edge.cachedPlans == requests.size)
+      // with the tables gone, only the memo can answer: a hit plans and
+      // scans nothing, and returns the executed body byte for byte
+      val moved = Files.move(wh, wh.resolveSibling(s"${wh.getFileName}-moved"))
+      try {
+        val memoized = requests.map(_(port))
+        memoized.zip(executed).foreach { case (m, e) =>
+          assert(m._1 == 200 && m._2.getBytes("UTF-8").sameElements(e._2.getBytes("UTF-8")),
+            s"memoized $m vs executed $e")
+        }
+        assert(edge.cachedPlans == requests.size)
+      } finally Files.move(moved, wh)
+    } finally edge.stop()
+  }
+
+  test("400s, 500s and /health are never memoized") {
+    val wh = Files.createTempDirectory("wh")
+    Warehouse.sync(spark, fixture(), wh.toString)
+    val edge = new HttpEdge(spark, wh.toString, port = 0).start()
+    try {
+      val port = edge.boundPort
+      val (hc, health) = get(port, "/health")
+      assert(hc == 200 && health.contains("\"healthy\":true"))
+      val bad = Seq(
+        () => get(port, "/transfers?status=committed"),
+        () => get(port, "/graphql?query=%7B"),
+        () => post(port, "/graphql", """{"query":"{ tenants { name } }"}"""))
+      for (_ <- 1 to 2; req <- bad) {
+        val (c, b) = req()
+        assert(c == 400, s"$c $b")
+      }
+      // a 500 (the tables are gone) is not stored: the same key executes
+      // again, and succeeds, once the tables are back
+      val moved = Files.move(wh, wh.resolveSibling(s"${wh.getFileName}-moved"))
+      val (c500, e500) = try get(port, "/tenants") finally Files.move(moved, wh)
+      assert(c500 == 500, s"$c500 $e500")
+      assert(edge.cachedPlans == 0, s"cachedPlans=${edge.cachedPlans}")
+      val (c200, tenants) = get(port, "/tenants")
+      assert(c200 == 200 && tenants.contains("TENANT"))
+      assert(edge.cachedPlans == 1)
+    } finally edge.stop()
+  }
+
+  test("GraphQL variables are memoized by type: 5 vs \"5\", null vs \"null\"") {
+    withEdge { port =>
+      def gql(query: String, vars: String) =
+        post(port, "/graphql", s"""{"query":"$query","variables":$vars}""")._1
+      val page = "query($l: Int!) { tenants(limit: $l, offset: 0) { name } }"
+      assert(gql(page, """{"l":5}""") == 200)
+      assert(gql(page, """{"l":"5"}""") == 400)
+      val one = "query($n: String) { tenant(name: $n) { name } }"
+      assert(gql(one, """{"n":"null"}""") == 200)
+      assert(gql(one, """{"n":null}""") == 400)
+    }
+  }
+
+  test("a request in flight across refresh() stores nothing in the new memo") {
+    import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
+    import java.util.concurrent.atomic.AtomicBoolean
+    import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+    import org.apache.spark.sql.catalyst.rules.Rule
+    // an optimizer rule that parks the first query it sees: the request is
+    // then past its snapshot capture and not yet rendered
+    val armed = new AtomicBoolean(true)
+    val entered, release = new CountDownLatch(1)
+    val gate = new Rule[LogicalPlan] {
+      def apply(plan: LogicalPlan): LogicalPlan = {
+        if (armed.getAndSet(false)) { entered.countDown(); release.await() }
+        plan
+      }
+    }
+    val wh = Files.createTempDirectory("wh").toString
+    Warehouse.sync(spark, fixture(), wh)
+    val edge = new HttpEdge(spark, wh, port = 0).start()
+    val client = Executors.newSingleThreadExecutor()
+    spark.experimental.extraOptimizations = spark.experimental.extraOptimizations :+ gate
+    try {
+      val port = edge.boundPort
+      val inFlight = client.submit(new java.util.concurrent.Callable[(Int, String)] {
+        def call() = get(port, "/tenants")
+      })
+      assert(entered.await(120, TimeUnit.SECONDS), "the request never reached the optimizer")
+      edge.refresh()
+      release.countDown()
+      val (code, body) = inFlight.get(120, TimeUnit.SECONDS)
+      assert(code == 200 && body.contains("TENANT"), s"$code $body")
+      assert(edge.cachedPlans == 0, "the pre-refresh body landed in the new memo")
+      assert(get(port, "/tenants") == (code, body))
+      assert(edge.cachedPlans == 1)
+    } finally {
+      release.countDown()
+      spark.experimental.extraOptimizations =
+        spark.experimental.extraOptimizations.filterNot(_ eq gate)
+      client.shutdown()
+      edge.stop()
+    }
+  }
+
+  test("the memo serves a body over its byte cap without keeping it, and evicts by bytes") {
+    val snap = new HttpEdge.Snapshot(None)
+    val cap = HttpEdge.MemoBytes.toInt
+    assert(snap.memo("big")("x" * (cap + 1)).length == cap + 1)
+    assert(snap.size == 0)
+    val half = "y" * (cap / 2)
+    Seq("a", "b").foreach(k => snap.memo(k)(half))
+    assert(snap.size == 2)
+    snap.memo("a")(fail("a is stored")) // touch a: b is now the eldest
+    snap.memo("c")(half)
+    assert(snap.size == 2)
+    assert(snap.memo("a")(fail("a was evicted")).length == cap / 2)
+    assert(snap.memo("b")("rendered again") sameElements "rendered again".getBytes("UTF-8"))
+    (1 to HttpEdge.MemoEntries + 1).foreach(i => snap.memo(s"k$i")("{}"))
+    assert(snap.size == HttpEdge.MemoEntries)
   }
 }
